@@ -1,0 +1,10 @@
+package perfbench
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** JSON for the benchmark's result and span files. */
+object Json {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+  def write(v: Any): String = mapper.writeValueAsString(v)
+}
