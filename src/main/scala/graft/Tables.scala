@@ -51,8 +51,10 @@ object Tables {
     * small (default < 64 MB, `spark.graft.spreadScanMaxBytes`), so at
     * production scale — where the table has at least one split per
     * core by construction — this is the identity and no corpus-sized
-    * input is ever shuffled. Size is taken from the local file;
-    * non-local paths (no cheap size probe) skip the spread. There is
+    * input is ever shuffled. Size is taken from the local file; a
+    * directory (a multi-part parquet write, whose `Files.size` is the
+    * inode's, not the data's) and non-local paths (no cheap size probe)
+    * skip the spread. There is
     * deliberately NO lower size bound (r22): the spread must fire at
     * EVERY test SF so the plan shape is scale-invariant — the bench's
     * untimed sf0.001 JIT warm then compiles exactly the generated
@@ -60,11 +62,13 @@ object Tables {
     * compiled the fused unspread shape and the first timed reading
     * paid the real plan's codegen). Broadcast-sized dimension tables
     * never reach this code — [[SpreadTables]] gates by table. */
-  private def spread(spark: SparkSession, path: String,
-                     df: DataFrame): DataFrame = {
+  private[graft] def spread(spark: SparkSession, path: String,
+                            df: DataFrame): DataFrame = {
     val bytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(path))
-      catch { case _: Exception => -1L }
+      try {
+        val p = java.nio.file.Paths.get(path)
+        if (java.nio.file.Files.isRegularFile(p)) java.nio.file.Files.size(p) else -1L
+      } catch { case _: Exception => -1L }
     val maxBytes = spark.conf.getOption("spark.graft.spreadScanMaxBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
     val cores = spark.sparkContext.defaultParallelism

@@ -5,13 +5,19 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.U256
+import graft.ingest.BlockFeed.{FeedRow, KeyBinding}
 import graft.model.Schemas
 
-/** Pure DataFrame→DataFrame derivations of the five reference tables from
-  * a block feed (Schemas.blockFeed shape). Batch-first: every transform
-  * here is also valid under Structured Streaming micro-batches (used by
-  * [[graft.streaming.BlockStreamPipeline]]), matching the reference's
-  * per-finalization write path (`insert_block`, main.rs:543-574).
+/** Derivations of the five reference tables from a block feed
+  * (Schemas.blockFeed shape), in two forms that must agree:
+  *
+  *  - DataFrame→DataFrame transforms — the batch path over a whole feed;
+  *  - beside each one, its per-row (or per-block) plain-Scala rule over
+  *    [[BlockFeed.FeedRow]]s, which [[graft.streaming.TransactionalSink]]
+  *    applies inside each block's transaction, matching the reference's
+  *    per-finalization write path (`insert_block`, main.rs:543-574).
+  *    The DataFrame form is the reference the rule is pinned against
+  *    (`BlockRowRulesSpec`).
   *
   * Scale notes (100 TB design):
   *  - ids are deterministic (`height*2^20 + seq`), so writes are
@@ -29,6 +35,8 @@ object BlockIngest {
   def summaryId(height: Column, seq: Column): Column =
     (height * Schemas.SeqMod + seq).cast("long")
 
+  def summaryId(r: FeedRow): Long = r.height * Schemas.SeqMod + r.seq_in_block
+
   /** Feed + derived id — base for all other derivations. */
   def withId(feed: DataFrame): DataFrame =
     feed.withColumn("id", summaryId(col("height"), col("seq_in_block")))
@@ -36,6 +44,9 @@ object BlockIngest {
   private def envelope: Column =
     when(col("is_special"), concat(lit("{\"Right\":"), col("payload_json"), lit("}")))
       .otherwise(concat(lit("{\"Left\":"), col("payload_json"), lit("}")))
+
+  private def envelope(r: FeedRow): String =
+    (if (r.is_special) "{\"Right\":" else "{\"Left\":") + r.payload_json + "}"
 
   /** `summaries`: one row per feed item, JSON envelope preserved
     * byte-compatibly (`{"Left":…}` user tx / `{"Right":…}` protocol
@@ -47,6 +58,10 @@ object BlockIngest {
       col("block_time_ms").as("timestamp"),
       col("height"),
       envelope.as("summary"))
+
+  /** [[summaries]] of one feed row: (id, block, timestamp, height, summary). */
+  def summaryOf(r: FeedRow): (Long, String, Long, Long, String) =
+    (summaryId(r), r.block_hash, r.block_time_ms, r.height, envelope(r))
 
   /** `summaries` plus the sender column (the reference derives it from
     * the JSON on the read path, `sender_account()`, postgres.rs:51-62;
@@ -71,12 +86,20 @@ object BlockIngest {
       explode(array_distinct(col("affected_accounts"))).as("account"),
       col("id").as("summary"))
 
+  /** [[ati]] of one feed row: (account, summary). */
+  def atiOf(r: FeedRow): Seq[(Long, Long)] =
+    r.affected_accounts.distinct.map(a => (a, summaryId(r)))
+
   /** `cti` fan-out (main.rs:331-352). */
   def cti(feed: DataFrame): DataFrame =
     withId(feed).select(
       explode(array_distinct(col("affected_contracts"))).as("c"),
       col("id").as("summary"))
       .select(col("c.index").as("index"), col("c.subindex").as("subindex"), col("summary"))
+
+  /** [[cti]] of one feed row: (index, subindex, summary). */
+  def ctiOf(r: FeedRow): Seq[(Long, Long, Long)] =
+    r.affected_contracts.distinct.map(c => (c.index, c.subindex, summaryId(r)))
 
   /** Per-batch CIS-2 supply deltas: signed decimal-string amounts keyed by
     * `(index, subindex, token_id)`. `mint` adds, `burn` subtracts,
@@ -101,6 +124,19 @@ object BlockIngest {
         col("e.token_id").as("token_id"),
         when(col("e.kind") === "burn", concat(lit("-"), col("e.amount")))
           .otherwise(col("e.amount")).as("delta"))
+
+  /** One [[cis2DeltaRows]] row; `seq` is the event's position in
+    * `cis2_events`, so non-mint/burn events still take up a position. */
+  final case class Cis2Delta(summary: Long, seq: Int, index: Long, subindex: Long,
+                             token_id: String, delta: String)
+
+  /** [[cis2DeltaRows]] of one feed row. */
+  def cis2DeltasOf(r: FeedRow): Seq[Cis2Delta] =
+    r.cis2_events.zipWithIndex.collect {
+      case (e, seq) if e.kind == "mint" || e.kind == "burn" =>
+        Cis2Delta(summaryId(r), seq, e.index, e.subindex, e.token_id,
+          if (e.kind == "burn") "-" + e.amount else e.amount)
+    }
 
   /** `cis2_tokens`: full-history running supply as arbitrary-precision
     * decimal strings (NUMERIC(80,0) analog; exceeds Decimal(38), SURVEY
@@ -134,6 +170,18 @@ object BlockIngest {
         col("b.credential_index").as("credential_index"),
         col("b.key_index").as("key_index"),
         col("b.is_simple_account").as("is_simple_account"))
+
+  /** [[keyBindings]] over the rows of ONE block: the latest snapshot per
+    * address, as (address, source summary id, snapshot), by address. A
+    * row with neither sender nor affected account names no address and
+    * is skipped. */
+  def latestBindingsOf(block: Seq[FeedRow]): Seq[(Long, Long, Seq[KeyBinding])] =
+    block.flatMap(r => for {
+      kb <- r.key_bindings
+      address <- r.sender.orElse(r.affected_accounts.headOption)
+    } yield (address, summaryId(r), kb))
+      .groupMapReduce(_._1)(identity)((a, b) => if (b._2 > a._2) b else a)
+      .values.toSeq.sortBy(_._1)
 
   /** A4 — alias canonicalization: resolve each (possibly aliased) account
     * to its canonical address by prefix equality against a canonical

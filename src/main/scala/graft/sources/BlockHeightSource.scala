@@ -36,7 +36,10 @@ import graft.model.Schemas
   *    the store is addressed by name through options;
   *  - a height range is split into `partitions` contiguous sub-ranges,
   *    one [[PartitionReader]] each — the per-partition fetch is the
-  *    `MAX_NODE_REQUESTS`-style bounded parallelism (main.rs:37).
+  *    `MAX_NODE_REQUESTS`-style bounded parallelism (main.rs:37);
+  *  - each height of a micro-batch is fetched once: the sink
+  *    ([[graft.streaming.TransactionalSink]]) reads the batch in one pass
+  *    and hands it to a single height-ordered writer.
   *
   * Usage:
   * {{{
@@ -167,9 +170,15 @@ private final class BlockMicroBatchStream(storeName: String, startHeight: Long,
 private final case class HeightRangePartition(storeName: String, from: Long, until: Long)
     extends InputPartition
 
+private object BlockRangeReader {
+  /** Deriving the encoder takes milliseconds, so it is done once per JVM;
+    * a serializer is not thread-safe, so each reader takes its own. */
+  lazy val encoder: ExpressionEncoder[FeedRow] = ExpressionEncoder[FeedRow]()
+}
+
 private final class BlockRangeReader(p: HeightRangePartition)
     extends PartitionReader[InternalRow] {
-  private val serializer = ExpressionEncoder[FeedRow]().createSerializer()
+  private val serializer = BlockRangeReader.encoder.createSerializer()
   private val it = BlockStores.get(p.storeName).blocks(p.from, p.until)
   private var cur: InternalRow = _
   override def next(): Boolean =

@@ -15,8 +15,11 @@ import graft.model.Schemas
   *    `num_parallel`); the checkpoint is the resume point (A11 — no
   *    startup MAX query needed);
   *  - transforms + sink: [[TransactionalSink.writeBatch]] in
-  *    foreachBatch — per-partition transactions, idempotent writes, so
-  *    task retries / query restarts give exactly-once (A10, A14).
+  *    foreachBatch — each micro-batch is read once and written by one
+  *    height-ordered writer, one transaction per block, so blocks commit
+  *    gap-free in height order (like the reference's single DB task);
+  *    writes are idempotent, so a query restart that replays a batch
+  *    gives exactly-once (A10, A14).
   *
   * Liveness (`max_behind`, A2) maps to monitoring
   * `query.lastProgress` timestamps — an ops concern, not a plan one.

@@ -3,31 +3,29 @@ package graft.streaming
 import java.math.BigInteger
 import java.sql.{Connection, PreparedStatement, SQLException}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.col
+
+import graft.ingest.BlockFeed.FeedRow
 import graft.ingest.BlockIngest
-import graft.model.Schemas
 
 /** Exactly-once JDBC sink for the block-feed stream — the Spark analog of
   * the reference's per-block transactional writer (insert_block,
   * main.rs:543-574; "each block is one DB transaction", README.md:41-44)
   * with the retry/replay semantics of its use_db loop (lib.rs:284-361).
   *
-  * **Per-block atomic visibility.** All rows derived from one block —
-  * summaries, ati, cti, cis2 deltas + supply, key bindings — are written
-  * in ONE JDBC transaction: the batch is repartitioned by `height` so a
-  * single task owns every row of a block, rows are sorted by height
-  * within the partition, and the writer commits once per block on a
-  * single connection (commit-by-height). A crash or kill at any point
-  * leaves every block either fully visible in all five tables or not
-  * visible at all — never a block with `summaries` present but `ati`
-  * missing. Blocks commit in height order within a partition; across
-  * partitions order is not guaranteed, which is why the streaming
-  * CHECKPOINT (not the A11 max-height query) is the resume authority
-  * mid-stream: a replayed micro-batch re-fills any inter-block gap
-  * idempotently. A11 remains correct for cold starts from a cleanly
-  * stopped DB.
+  * **One ordered writer per micro-batch.** The batch is read once, moved
+  * to a single partition and sorted by (height, seq_in_block); that one
+  * task derives each block's rows with the per-block rules of
+  * [[BlockIngest]] and writes them on one connection, committing once per
+  * block. Blocks therefore commit gap-free in height order — like the
+  * reference's single DB task — so the A11 max-height probe is a valid
+  * resume point at any moment, mid-stream included. Per-block atomic
+  * visibility follows: a crash or kill at any point leaves every block
+  * either fully visible in all five tables or not visible at all, and
+  * every block above the failed one unattempted.
   *
   * Exactly-once is BY CONSTRUCTION, not by ledger:
   *  - every row has a deterministic natural key (engine-derived ids,
@@ -40,16 +38,18 @@ import graft.model.Schemas
   *    arithmetic — NUMERIC(80,0) analog), so replays add nothing twice.
   *    The supply read-modify-write is an optimistic CAS
   *    (`UPDATE … WHERE total_supply = <read value>`, savepoint-guarded
-  *    insert race) so two partitions touching the same token converge;
-  *    a deadlock abort fails the task and the idempotent retry heals;
-  *  - key bindings are pre-reduced to the LATEST snapshot per (address,
-  *    BLOCK) — per block, not per batch, so every block transaction
-  *    carries its own snapshot and the all-five-tables atomic-visibility
-  *    invariant holds for bindings too (a reader between two commits of
-  *    one batch never sees block N present with block N's binding
-  *    missing). Across blocks and replayed batches the src_id
+  *    insert race) so a concurrent writer outside this sink converges;
+  *  - key bindings are the LATEST snapshot per (address, BLOCK) — per
+  *    block, not per batch, so every block transaction carries its own
+  *    snapshot and the all-five-tables atomic-visibility invariant holds
+  *    for bindings too. Across blocks and replayed batches the src_id
   *    last-write-wins guards make older snapshots no-ops, matching the
   *    reference's final state (main.rs:506-540).
+  *
+  * Supply keys and binding addresses are applied in sorted order, so
+  * any two writers take their row locks in one order. A failed block fails the task and with it the micro-batch (`local[n]`
+  * runs with no task retry); restarting the query replays the batch from
+  * its checkpoint, and the replay is idempotent.
   *
   * Driver requirement: `executeBatch` per-statement counts MUST be real
   * row counts — the CIS-2 supply fold depends on them. A driver
@@ -61,80 +61,32 @@ import graft.model.Schemas
   */
 object TransactionalSink extends Serializable {
 
-  private def heightOfId(id: org.apache.spark.sql.Column) =
-    shiftright(id, Schemas.SeqBits)
-
-  /** Write one micro-batch of feed rows (Schemas.blockFeed + id) into
-    * the serving DB with per-block atomicity. Pure function of the
-    * batch — usable from foreachBatch (streaming) or directly (batch
-    * backfill, A13). */
-  def writeBatch(feedBatch: DataFrame, url: String, dialect: Dialect): Unit = {
-    val withId = BlockIngest.withId(feedBatch)
-
-    val summaries = BlockIngest.summaries(feedBatch).select(
-      col("height"), lit(0).as("tag"),
-      col("id").as("s_id"), col("block").as("s_block"),
-      col("timestamp").as("s_ts"), col("summary").as("s_summary"))
-
-    val ati = BlockIngest.ati(feedBatch).select(
-      heightOfId(col("summary")).as("height"), lit(1).as("tag"),
-      col("account").as("a_account"), col("summary").as("a_summary"))
-
-    val cti = BlockIngest.cti(feedBatch).select(
-      heightOfId(col("summary")).as("height"), lit(2).as("tag"),
-      col("index").as("c_idx"), col("subindex").as("c_subidx"),
-      col("summary").as("c_summary"))
-
-    val deltas = BlockIngest.cis2DeltaRows(withId).select(
-      heightOfId(col("summary")).as("height"), lit(3).as("tag"),
-      col("summary").as("d_summary"), col("seq").as("d_seq"),
-      col("index").as("d_idx"), col("subindex").as("d_subidx"),
-      col("token_id").as("d_token"), col("delta").as("d_delta"))
-
-    // Latest snapshot per (address, block): each block transaction writes
-    // its own snapshot (atomic visibility); src_id LWW guards resolve
-    // across blocks.
-    val bindings = withId
-      .where(col("key_bindings").isNotNull)
-      .select(coalesce(col("sender"), col("affected_accounts").getItem(0)).as("address"),
-        col("id"), col("key_bindings"))
-      .groupBy(col("address"), heightOfId(col("id")).as("b_height"))
-      .agg(max_by(struct(col("id"), col("key_bindings")), col("id")).as("w"))
-      .select(col("address"), col("w.id").as("id"), explode(col("w.key_bindings")).as("b"))
-      .select(heightOfId(col("id")).as("height"), lit(4).as("tag"),
-        col("address").as("b_address"), col("id").as("b_src"),
-        col("b.credential_index").as("b_cred"), col("b.key_index").as("b_key"),
-        col("b.public_key").as("b_pub"), col("b.is_simple_account").as("b_simple"))
-
-    val all = Seq(summaries, ati, cti, deltas, bindings)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-
-    all.repartition(col("height"))
-      .sortWithinPartitions(col("height"), col("tag"))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) writePartition(rows, url, dialect)
+  /** Write one micro-batch of feed rows (Schemas.blockFeed, Long
+    * addresses) into the serving DB with per-block atomicity. Pure
+    * function of the batch — usable from foreachBatch (streaming) or
+    * directly (batch backfill, A13). */
+  def writeBatch(feedBatch: DataFrame, url: String, dialect: Dialect): Unit =
+    feedBatch.as(Encoders.product[FeedRow])
+      .repartition(1)
+      .sortWithinPartitions(col("height"), col("seq_in_block"))
+      .foreachPartition { (rows: Iterator[FeedRow]) =>
+        if (rows.hasNext) writePartition(rows.buffered, url, dialect)
       }
-  }
 
-  /** One connection per partition; one transaction (commit) per block. */
-  private def writePartition(rows: Iterator[Row], url: String, dialect: Dialect): Unit = {
+  /** One connection; one transaction (commit) per block, in height order. */
+  private def writePartition(rows: BufferedIterator[FeedRow], url: String,
+                             dialect: Dialect): Unit = {
     val c = Migrations.connect(url)
     try {
       c.setAutoCommit(false)
       val st = new BlockStatements(c, dialect)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var curHeight = Long.MinValue
-      def flush(): Unit = if (buf.nonEmpty) {
-        writeBlock(c, st, buf.toSeq)
+      while (rows.hasNext) {
+        val height = rows.head.height
+        val block = ArrayBuffer.empty[FeedRow]
+        while (rows.hasNext && rows.head.height == height) block += rows.next()
+        writeBlock(c, st, block.toSeq)
         c.commit()
-        buf.clear()
       }
-      rows.foreach { r =>
-        val h = r.getAs[Long]("height")
-        if (h != curHeight) { flush(); curHeight = h }
-        buf += r
-      }
-      flush()
       st.close()
     } catch {
       case e: Throwable => c.rollback(); throw e
@@ -143,69 +95,50 @@ object TransactionalSink extends Serializable {
 
   /** All writes of one block, in the reference's insert order
     * (main.rs:543-574): summaries → ati → cti → cis2 → bindings. */
-  private def writeBlock(c: Connection, st: BlockStatements, rows: Seq[Row]): Unit = {
-    val byTag = rows.groupBy(_.getAs[Int]("tag"))
-
-    byTag.getOrElse(0, Nil).foreach { r =>
-      st.insSummary.add(Seq(r.getAs[Long]("s_id"), r.getAs[String]("s_block"),
-        r.getAs[Long]("s_ts"), r.getAs[Long]("height"), r.getAs[String]("s_summary")))
-    }
+  private def writeBlock(c: Connection, st: BlockStatements, block: Seq[FeedRow]): Unit = {
+    block.foreach(r => st.insSummary.add(BlockIngest.summaryOf(r)))
     st.insSummary.executeBatch()
 
-    byTag.getOrElse(1, Nil).foreach { r =>
-      st.insAti.add(Seq(r.getAs[Long]("a_account"), r.getAs[Long]("a_summary")))
-    }
+    block.foreach(r => BlockIngest.atiOf(r).foreach(st.insAti.add))
     st.insAti.executeBatch()
 
-    byTag.getOrElse(2, Nil).foreach { r =>
-      st.insCti.add(Seq(r.getAs[Long]("c_idx"), r.getAs[Long]("c_subidx"),
-        r.getAs[Long]("c_summary")))
-    }
+    block.foreach(r => BlockIngest.ctiOf(r).foreach(st.insCti.add))
     st.insCti.executeBatch()
 
     // CIS-2: batched conditional inserts; executeBatch update counts say
     // which deltas are NEW in this transaction — only those fold into
     // the running supply (replay inserts 0 ⇒ applies 0).
-    val deltaRows = byTag.getOrElse(3, Nil)
-    deltaRows.foreach { r =>
-      st.insDelta.add(Seq(r.getAs[Long]("d_summary"), r.getAs[Int]("d_seq"),
-        r.getAs[Long]("d_idx"), r.getAs[Long]("d_subidx"),
-        r.getAs[String]("d_token"), r.getAs[String]("d_delta")))
-    }
+    val deltas = block.flatMap(BlockIngest.cis2DeltasOf)
+    deltas.foreach(st.insDelta.add)
     val inserted = st.insDelta.executeBatch()
     // The supply fold is only sound with REAL per-statement counts; a
     // driver answering SUCCESS_NO_INFO (-2) would silently misclassify
     // new deltas as replays (permanent, invisible supply corruption) —
-    // fail the task instead and let the idempotent retry surface it.
+    // fail the block instead.
     require(inserted.forall(_ >= 0),
       "cis2 delta executeBatch returned SUCCESS_NO_INFO; exact update " +
         "counts are required (disable driver batch rewriting, e.g. " +
         "pgjdbc reWriteBatchedInserts)")
-    val acc = scala.collection.mutable.LinkedHashMap.empty[(Long, Long, String), BigInteger]
-    deltaRows.zip(inserted).foreach { case (r, n) =>
-      if (n == 1) {
-        val key = (r.getAs[Long]("d_idx"), r.getAs[Long]("d_subidx"),
-          r.getAs[String]("d_token"))
-        val d = new BigInteger(r.getAs[String]("d_delta"))
-        acc.updateWith(key)(v => Some(v.getOrElse(BigInteger.ZERO).add(d)))
-      }
-    }
-    acc.foreach { case (key, d) => applySupply(c, st, key, d) }
+    deltas.zip(inserted).collect { case (d, 1) => d }
+      .groupMapReduce(d => (d.index, d.subindex, d.token_id))(d => new BigInteger(d.delta))(_ add _)
+      .toSeq.sortBy(_._1)
+      .foreach { case (key, d) => applySupply(c, st, key, d) }
 
-    byTag.getOrElse(4, Nil).foreach { r =>
-      val (addr, id) = (r.getAs[Long]("b_address"), r.getAs[Long]("b_src"))
-      st.delBindings.setLong(1, addr); st.delBindings.setLong(2, id)
-      st.delBindings.executeUpdate()
-      st.insBinding.setLong(1, addr); st.insBinding.setLong(2, id)
-      st.insBinding.setInt(3, r.getAs[Int]("b_cred"))
-      st.insBinding.setInt(4, r.getAs[Int]("b_key"))
-      st.insBinding.setString(5, r.getAs[String]("b_pub"))
-      st.insBinding.setBoolean(6, r.getAs[Boolean]("b_simple"))
-      st.insBinding.setLong(7, addr); st.insBinding.setLong(8, id)
-      st.insBinding.setLong(9, addr); st.insBinding.setLong(10, id)
-      st.insBinding.setInt(11, r.getAs[Int]("b_cred"))
-      st.insBinding.setInt(12, r.getAs[Int]("b_key"))
-      st.insBinding.executeUpdate()
+    BlockIngest.latestBindingsOf(block).foreach { case (addr, id, snapshot) =>
+      snapshot.foreach { b =>
+        st.delBindings.setLong(1, addr); st.delBindings.setLong(2, id)
+        st.delBindings.executeUpdate()
+        st.insBinding.setLong(1, addr); st.insBinding.setLong(2, id)
+        st.insBinding.setInt(3, b.credential_index)
+        st.insBinding.setInt(4, b.key_index)
+        st.insBinding.setString(5, b.public_key)
+        st.insBinding.setBoolean(6, b.is_simple_account)
+        st.insBinding.setLong(7, addr); st.insBinding.setLong(8, id)
+        st.insBinding.setLong(9, addr); st.insBinding.setLong(10, id)
+        st.insBinding.setInt(11, b.credential_index)
+        st.insBinding.setInt(12, b.key_index)
+        st.insBinding.executeUpdate()
+      }
     }
   }
 
@@ -260,11 +193,11 @@ object TransactionalSink extends Serializable {
       case other => ps.setObject(i, other)
     }
 
-    /** Bind one row (values in `cols` order) and add it to the batch. */
-    def add(values: Seq[Any]): Unit = {
-      values.zipWithIndex.foreach { case (v, i) => set(i + 1, v) }
+    /** Bind one row (fields in `cols` order) and add it to the batch. */
+    def add(row: Product): Unit = {
+      row.productIterator.zipWithIndex.foreach { case (v, i) => set(i + 1, v) }
       if (rebindKeys) keyIdx.zipWithIndex.foreach { case (ki, i) =>
-        set(values.size + i + 1, values(ki))
+        set(row.productArity + i + 1, row.productElement(ki))
       }
       ps.addBatch()
     }
@@ -272,7 +205,7 @@ object TransactionalSink extends Serializable {
     def close(): Unit = ps.close()
   }
 
-  /** Prepared statements reused across all blocks of a partition. */
+  /** Prepared statements reused across all blocks of a micro-batch. */
   private final class BlockStatements(c: Connection, dialect: Dialect) {
     private val dummy = dialect.dummyFrom
 

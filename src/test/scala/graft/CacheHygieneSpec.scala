@@ -15,6 +15,7 @@ class CacheHygieneSpec extends SparkSpec {
   private val cacheUsers = Seq(
     "dj", "dl", "dc", "dr",
     "md", // dedupPairs rides ngramJaccard's persisted shingle frame
+    "cns", // the shared hashed-shingle pass is persisted at the call site (r22)
     "ms", "mp", // mpPairs persists the shared refs/urls fixture lineage (r21)
     "db", // keepBest persists the duplicate-sized withScore frame (r21)
     "hits", // per-sweep localCheckpoints + the call-site edge persist (r22)

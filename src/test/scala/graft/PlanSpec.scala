@@ -20,9 +20,14 @@ class PlanSpec extends SparkSpec {
     * the scan-parallelism floor's round-robin spread of a tiny seed
     * table (Tables.spread, r22) — it fires at every SF precisely so
     * these test-scale plans match the bench-scale plans, and it is the
-    * one exchange a narrow per-document pipeline is allowed. */
-  private def opExchanges(p: String): Int =
-    count(p, "Exchange") - count(p, "Exchange RoundRobinPartitioning")
+    * one exchange a narrow per-document pipeline is allowed — so at most
+    * one round-robin exchange may appear; a second one would be a
+    * repartition leak this count could not see. */
+  private def opExchanges(p: String): Int = {
+    val spreads = count(p, "Exchange RoundRobinPartitioning")
+    assert(spreads <= 1, s"expected at most the one scan-spread exchange in:\n$p")
+    count(p, "Exchange") - spreads
+  }
 
   test("b1 account page: top-k via TakeOrderedAndProject, cursor pushed to scan") {
     val p = plan("b1a")

@@ -137,4 +137,36 @@ class BlockHeightSourceSpec extends SparkSpec {
     assert(one("SELECT COUNT(*) FROM summaries") == 8)
     assert(one("SELECT total_supply FROM cis2_tokens WHERE idx = 0 AND subidx = 0") == "108")
   }
+
+  test("startFromStore: the sink fetches every height once per micro-batch") {
+    // The sink reads each micro-batch in one pass, so the store sees
+    // each height of the batch requested once, not once per derived table.
+    final class CountingStore(max: Long) extends BlockStore {
+      val fetched = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      override def latestHeight(): Long = max
+      override def blocks(from: Long, until: Long): Iterator[FeedRow] = {
+        (from until until).foreach(h => fetched.add(h))
+        (from until until).iterator.flatMap(h => Seq(mkRow(h, 0), mkRow(h, 1)))
+      }
+    }
+    val root = Files.createTempDirectory("graft-height-once").toString
+    val url = s"jdbc:derby:$root/db;create=true"
+    Migrations.migrate(url, Dialect.Derby)
+    val store = new CountingStore(11)
+    BlockStores.register("counting-store", store)
+
+    val q = BlockStreamPipeline.startFromStore(spark, "counting-store", s"$root/ckpt", url,
+      Dialect.Derby, availableNow = true, maxBlocksPerTrigger = 4, partitions = 2)
+    q.awaitTermination(120000)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    import scala.jdk.CollectionConverters._
+    val perHeight = store.fetched.asScala.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(perHeight == (0L to 11L).map(_ -> 1).toMap)
+    val c = Migrations.connect(url)
+    try {
+      val rs = c.createStatement().executeQuery("SELECT COUNT(*) FROM summaries")
+      rs.next()
+      assert(rs.getLong(1) == 24)
+    } finally c.close()
+  }
 }

@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode}
 
 import graft.SparkSpec
-import graft.ingest.{BlockFeed, BlockIngest}
+import graft.ingest.BlockIngest
+import graft.ingest.BlockFeed.{Cis2Event, Contract, FeedRow, KeyBinding}
 import graft.model.Schemas
 
 /** End-to-end streaming test: feed parquet → Structured Streaming →
@@ -39,16 +40,7 @@ class BlockStreamPipelineSpec extends SparkSpec {
       Schemas.blockFeed(org.apache.spark.sql.types.LongType))
   }
 
-  private def q(sql: String): Seq[Seq[Any]] = {
-    val c = Migrations.connect(url)
-    try {
-      val rs = c.createStatement().executeQuery(sql)
-      val n = rs.getMetaData.getColumnCount
-      val buf = scala.collection.mutable.Buffer.empty[Seq[Any]]
-      while (rs.next()) buf += (1 to n).map(rs.getObject)
-      buf.toSeq
-    } finally c.close()
-  }
+  private def q(sql: String): Seq[Seq[Any]] = rows(url, sql)
 
   private def runPipeline(): Unit = {
     val query = BlockStreamPipeline.start(spark, feedDir, ckpt, url,
@@ -101,42 +93,64 @@ class BlockStreamPipelineSpec extends SparkSpec {
     assert(q("SELECT COUNT(*) FROM bindings WHERE address = 99").head.head == 1)
 
     // cross-check every table against the pure batch derivation
-    val feed = BlockFeed // (symmetry note: stream used raw mkFeed rows)
-    val full = mkFeed(0 until 10)
-    val expSummaries = BlockIngest.summaries(full).collect()
-      .map(r => (r.getLong(0), r.getString(4))).toSet
-    val gotSummaries = q("SELECT id, summary FROM summaries")
-      .map(r => (r.head.asInstanceOf[Number].longValue(), r(1).asInstanceOf[String])).toSet
-    assert(gotSummaries == expSummaries)
+    assertTablesEqual(url, mkFeed(0 until 10))
+  }
 
-    val expAti = BlockIngest.ati(full).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val gotAti = q("SELECT account, summary FROM ati")
-      .map(r => (r.head.asInstanceOf[Number].longValue(),
-        r(1).asInstanceOf[Number].longValue())).toSet
-    assert(gotAti == expAti)
+  private def rows(url: String, sql: String): Seq[Seq[Any]] = {
+    val c = Migrations.connect(url)
+    try {
+      val rs = c.createStatement().executeQuery(sql)
+      val n = rs.getMetaData.getColumnCount
+      val buf = scala.collection.mutable.Buffer.empty[Seq[Any]]
+      while (rs.next()) buf += (1 to n).map(rs.getObject)
+      buf.toSeq
+    } finally c.close()
+  }
 
-    val expTok = BlockIngest.cis2Tokens(full).collect()
-      .map(r => ((r.getLong(0), r.getLong(1), r.getString(2)), r.getString(3))).toMap
-    val gotTok = q("SELECT idx, subidx, token_id, total_supply FROM cis2_tokens")
-      .map(r => ((r(0).asInstanceOf[Number].longValue(),
-        r(1).asInstanceOf[Number].longValue(), r(2).asInstanceOf[String]),
-        r(3).asInstanceOf[String])).toMap
-    assert(gotTok == expTok)
+  /** Runs `body` with adaptive execution on or off and four shuffle
+    * partitions — with AQE off, a hash shuffle of a batch really does
+    * spread it over four tasks. */
+  private def withAqe(enabled: Boolean)(body: => Unit): Unit = {
+    val settings = Map("spark.sql.adaptive.enabled" -> enabled.toString,
+      "spark.sql.shuffle.partitions" -> "4")
+    val saved = settings.keys.map(k => k -> spark.conf.getOption(k))
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The six serving tables in `url` equal the batch derivation over `full`. */
+  private def assertTablesEqual(url: String, full: DataFrame): Unit = {
+    def render(xs: Seq[Seq[Any]]): Seq[String] = xs.map(_.map(String.valueOf).mkString("|")).sorted
+    def exp(df: DataFrame): Seq[String] = render(df.collect().toSeq.map(_.toSeq))
+    def got(sql: String): Seq[String] = render(rows(url, sql))
+    assert(got("SELECT id, block, ts, height, summary FROM summaries") ==
+      exp(BlockIngest.summaries(full)))
+    assert(got("SELECT account, summary FROM ati") == exp(BlockIngest.ati(full)))
+    assert(got("SELECT idx, subidx, summary FROM cti") == exp(BlockIngest.cti(full)))
+    assert(got("SELECT summary, seq, idx, subidx, token_id, delta FROM cis2_deltas") ==
+      exp(BlockIngest.cis2DeltaRows(BlockIngest.withId(full))))
+    assert(got("SELECT idx, subidx, token_id, total_supply FROM cis2_tokens") ==
+      exp(BlockIngest.cis2Tokens(full)))
+    assert(got("SELECT address, public_key, credential_index, key_index, is_simple_account " +
+      "FROM bindings") == exp(BlockIngest.keyBindings(full)))
   }
 
   test("a failed write leaves no block partially visible (per-block atomicity)") {
-    // Block 2's binding row violates the 256-char public_key column, so
+    // Block k's binding row violates the 256-char public_key column, so
     // its transaction dies AFTER the block's summaries/ati/cti/deltas
     // statements already executed — the rollback must hide all of them
-    // (insert_block one-transaction-per-block, main.rs:543-574).
-    val root2 = Files.createTempDirectory("graft-atomic").toString
-    val url2 = s"jdbc:derby:$root2/db;create=true"
-    Migrations.migrate(url2, Dialect.Derby)
-
+    // (insert_block one-transaction-per-block, main.rs:543-574). The one
+    // height-ordered writer commits every block below k first and never
+    // reaches a block above it, whatever AQE does to the shuffle.
+    val heights = 0 until 8
+    val k = 5
     def feed(poison: Boolean): DataFrame = {
-      val rows = (0 until 4).flatMap { h =>
-        val pk = if (poison && h == 2) "x" * 300 else s"pk-$h"
+      val rows = heights.flatMap { h =>
+        val pk = if (poison && h == k) "x" * 300 else s"pk-$h"
         Seq(
           Row(h.toLong, 0, s"h$h", 1000L * h, s"""{"k":$h}""", false, (h % 3).toLong,
             Seq((h % 3).toLong, ((h + 1) % 3).toLong),
@@ -149,40 +163,69 @@ class BlockStreamPipelineSpec extends SparkSpec {
         )
       }
       spark.createDataFrame(rows.asJava,
-        Schemas.blockFeed(org.apache.spark.sql.types.LongType))
-    }
-    def q2(sql: String): Seq[Seq[Any]] = {
-      val c = Migrations.connect(url2)
-      try {
-        val rs = c.createStatement().executeQuery(sql)
-        val n = rs.getMetaData.getColumnCount
-        val buf = scala.collection.mutable.Buffer.empty[Seq[Any]]
-        while (rs.next()) buf += (1 to n).map(rs.getObject)
-        buf.toSeq
-      } finally c.close()
+        Schemas.blockFeed(org.apache.spark.sql.types.LongType)).repartition(3)
     }
 
-    intercept[Exception] {
-      TransactionalSink.writeBatch(feed(poison = true), url2, Dialect.Derby)
-    }
-    val lo = 2L * Schemas.SeqMod
-    val hi = 3L * Schemas.SeqMod
-    assert(q2("SELECT COUNT(*) FROM summaries WHERE height = 2").head.head == 0)
-    assert(q2(s"SELECT COUNT(*) FROM ati WHERE summary >= $lo AND summary < $hi").head.head == 0)
-    assert(q2(s"SELECT COUNT(*) FROM cti WHERE summary >= $lo AND summary < $hi").head.head == 0)
-    assert(q2(s"SELECT COUNT(*) FROM cis2_deltas WHERE summary >= $lo AND summary < $hi").head.head == 0)
-    assert(q2("SELECT COUNT(*) FROM bindings WHERE address = 92").head.head == 0)
+    for (aqe <- Seq(true, false)) withAqe(aqe) {
+      val root2 = Files.createTempDirectory("graft-atomic").toString
+      val url2 = s"jdbc:derby:$root2/db;create=true"
+      Migrations.migrate(url2, Dialect.Derby)
+      def committed(sql: String): Set[Long] =
+        rows(url2, sql).map(_.head.asInstanceOf[Number].longValue()).toSet
 
-    // Replaying the corrected batch heals the gap; already-committed
-    // blocks dedup via the conditional inserts (idempotent replay).
-    TransactionalSink.writeBatch(feed(poison = false), url2, Dialect.Derby)
-    assert(q2("SELECT COUNT(*) FROM summaries").head.head == 8)
-    assert(q2("SELECT COUNT(*) FROM cis2_deltas").head.head == 4)
-    assert(q2("SELECT COUNT(*) FROM bindings").head.head == 4)
-    // mints on (0,0): heights 0 and 2 → 10 + 12
-    assert(q2("SELECT total_supply FROM cis2_tokens WHERE idx = 0 AND subidx = 0")
-      .head.head == "22")
-    assert(q2("SELECT total_supply FROM cis2_tokens WHERE idx = 1 AND subidx = 0")
-      .head.head == "24")
+      intercept[Exception] {
+        TransactionalSink.writeBatch(feed(poison = true), url2, Dialect.Derby)
+      }
+      val below = (0L until k.toLong).toSet
+      val perBlock = s"/ ${Schemas.SeqMod}"
+      assert(committed("SELECT height FROM summaries") == below, s"aqe=$aqe")
+      assert(committed(s"SELECT summary $perBlock FROM ati") == below, s"aqe=$aqe")
+      assert(committed(s"SELECT summary $perBlock FROM cti") == below, s"aqe=$aqe")
+      assert(committed(s"SELECT summary $perBlock FROM cis2_deltas") == below, s"aqe=$aqe")
+      assert(committed("SELECT address - 90 FROM bindings") == below, s"aqe=$aqe")
+      // mints on (0,0) at heights 0, 2, 4 and on (1,0) at 1, 3
+      assert(rows(url2, "SELECT idx, total_supply FROM cis2_tokens").map(r =>
+        (r.head.asInstanceOf[Number].longValue(), r(1))).toSet == Set((0L, "36"), (1L, "24")))
+
+      // Replaying the corrected batch heals the gap; already-committed
+      // blocks dedup via the conditional inserts (idempotent replay).
+      TransactionalSink.writeBatch(feed(poison = false), url2, Dialect.Derby)
+      assertTablesEqual(url2, feed(poison = false))
+    }
+  }
+
+  test("a multi-batch, multi-token drain with AQE off completes and equals the batch derivation") {
+    // Every block mints and burns on the same few tokens. Several writer
+    // tasks per batch would each hold a lock on a token row and wait for
+    // the other's, a Derby deadlock (ERROR 40001) that a local[n] master
+    // never retries; the one ordered writer has no peer to deadlock with.
+    def row(h: Long, seq: Int): FeedRow = FeedRow(h, seq, s"h$h", 1000L * h,
+      s"""{"k":$h}""", is_special = seq == 2, sender = if (seq == 2) None else Some(h % 7),
+      affected_accounts = Seq(h % 7, (h + seq) % 11), affected_contracts = Seq(Contract(h % 3, 0L)),
+      cis2_events = (0 until 4).map(t => Cis2Event(t % 2, 0L, s"t$t",
+        if ((h + t + seq) % 3 == 0) "burn" else "mint", (h * 10 + t).toString)),
+      key_bindings = if (h % 4 == seq) Some(Seq(KeyBinding(0, seq, s"pk-$h-$seq", seq == 0)))
+        else None)
+    final class TokenStore(max: Long) extends graft.sources.BlockStore {
+      override def latestHeight(): Long = max
+      override def blocks(from: Long, until: Long): Iterator[FeedRow] =
+        (from until until).iterator.flatMap(h => (0 until 3).map(row(h, _)))
+    }
+    val maxHeight = 47L
+    graft.sources.BlockStores.register("token-store", new TokenStore(maxHeight))
+    val root3 = Files.createTempDirectory("graft-aqe-off").toString
+    val url3 = s"jdbc:derby:$root3/db;create=true"
+    Migrations.migrate(url3, Dialect.Derby)
+
+    withAqe(enabled = false) {
+      val query = BlockStreamPipeline.startFromStore(spark, "token-store", s"$root3/ckpt",
+        url3, Dialect.Derby, availableNow = true, maxBlocksPerTrigger = 16)
+      try assert(query.awaitTermination(120000), "the drain did not finish")
+      finally query.stop()
+      assert(query.recentProgress.count(_.numInputRows > 0) == 3)
+    }
+    val full = spark.createDataset((0L to maxHeight).flatMap(h => (0 until 3).map(row(h, _))))(
+      Encoders.product[FeedRow]).toDF()
+    assertTablesEqual(url3, full)
   }
 }
